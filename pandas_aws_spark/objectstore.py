@@ -84,7 +84,9 @@ def list_keys(
     fs, base_path, _ = _hadoop_fs(spark, base_uri)
     if not fs.exists(base_path):
         return []
-    base_str = base_path.toString().rstrip("/")
+    # listed paths come back qualified (file:/..., s3a://...); qualify
+    # the base the same way, or a scheme-less base never prefixes them
+    base_str = fs.makeQualified(base_path).toString().rstrip("/")
     out: list[str] = []
     it = fs.listFiles(base_path, recursive)
     while it.hasNext():

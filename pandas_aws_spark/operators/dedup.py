@@ -241,18 +241,21 @@ def minhash_signatures(
     the base digest is computed once per shingle row map-side, the n
     affine members are integer ops, and only n int64 minima shuffle
     (partial-agg combine keeps it one row per (task, doc))."""
-    assert n_hashes <= len(_MINHASH_A), f"at most {len(_MINHASH_A)} hash members"
     if "h" in shingled.columns:  # pre-hashed (doc_shingle_hashes)
         hashed = shingled.select(F.col(id_col), F.col("h").alias("_h"))
     else:
         hashed = shingled.select(F.col(id_col), shingle_base_hash(F.col("shingle")).alias("_h"))
-    aggs = [
-        F.min((F.lit(_MINHASH_A[j]) * F.col("_h") + F.lit(_MINHASH_B[j])) % MINHASH_P).alias(
-            f"h{j}"
-        )
+    return hashed.groupBy(id_col).agg(*_minhash_aggs(F.col("_h"), n_hashes))
+
+
+def _minhash_aggs(h: Column, n_hashes: int) -> list[Column]:
+    """The per-doc signature minima ``h0..h{n-1}``: member j of the
+    affine family folded with ``min`` over the doc's base hashes ``h``."""
+    assert n_hashes <= len(_MINHASH_A), f"at most {len(_MINHASH_A)} hash members"
+    return [
+        F.min((F.lit(_MINHASH_A[j]) * h + F.lit(_MINHASH_B[j])) % MINHASH_P).alias(f"h{j}")
         for j in range(n_hashes)
     ]
-    return hashed.groupBy(id_col).agg(*aggs)
 
 
 def _per_doc_minhash(
@@ -261,6 +264,7 @@ def _per_doc_minhash(
     n_hashes: int,
     *,
     sorted_packs: bool = False,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """One row per doc carrying BOTH the minhash signature columns
     ``h0..h{n-1}`` AND the packed shingle-hash array ``hs`` — in ONE
@@ -274,23 +278,27 @@ def _per_doc_minhash(
     the pack holds the same rows (``array_sort``-ed when the pack is a
     stored artifact, exactly like the pre-r15 build; unsorted packs
     feed only order-insensitive consumers — ``array_intersect`` /
-    ``size`` in the jaccard verify)."""
-    assert n_hashes <= len(_MINHASH_A), f"at most {len(_MINHASH_A)} hash members"
+    ``size`` in the jaccard verify).
+
+    ``n_hashes=0`` yields the verify packs alone (the simhash
+    operators); ``keys`` are per-doc columns carried through the
+    grouping (the blocked n-gram LSH branch's block columns)."""
     pack = F.collect_list("h")
     if sorted_packs:
         pack = F.array_sort(pack)
-    aggs = [
-        F.min(
-            (F.lit(_MINHASH_A[j]) * F.col("h") + F.lit(_MINHASH_B[j])) % MINHASH_P
-        ).alias(f"h{j}")
-        for j in range(n_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs, pack.alias("hs"))
+    aggs = _minhash_aggs(F.col("h"), n_hashes)
+    return sh.groupBy(id_col, *keys).agg(*aggs, pack.alias("hs"))
 
 
 def lsh_band_buckets(signatures: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
     """Explode signatures into (id, band, band_signature). Docs sharing
     a band signature are LSH candidates."""
+    return _band_buckets(signatures, [id_col], bands, rows)
+
+
+def _band_buckets(signatures: DataFrame, cols: list[str], bands: int, rows: int) -> DataFrame:
+    """:func:`lsh_band_buckets` carrying every column of ``cols`` (the
+    id first) onto each posting row."""
     n = bands * rows
     assert all(f"h{j}" in signatures.columns for j in range(n)), "not enough hash columns"
 
@@ -312,8 +320,8 @@ def lsh_band_buckets(signatures: DataFrame, id_col: str, bands: int, rows: int) 
             for b in range(bands)
         ]
     )
-    return signatures.select(F.col(id_col), F.explode(entries).alias("e")).select(
-        id_col, F.col("e.band").alias("band"), F.col("e.sig").alias("sig")
+    return signatures.select(*cols, F.explode(entries).alias("e")).select(
+        *cols, F.col("e.band").alias("band"), F.col("e.sig").alias("sig")
     )
 
 
@@ -345,54 +353,15 @@ def minhash_near_dup_pairs(
     # doc), a fraction of the exploded set.
     sh = doc_shingle_hashes(df, id_col, text_col, shingle_k, hash_fn)
     per_doc = _per_doc_minhash(sh, id_col, n_hashes).persist()
-    buckets = lsh_band_buckets(per_doc, id_col, bands, rows)
-    if max_band_bucket is not None:
-        # drop degenerate buckets (boilerplate collisions) via a window
-        # over the band key: ONE shuffle on (band, sig) — the same
-        # partitioning the candidate self-join needs — instead of a
-        # groupBy + broadcast semi-join, whose build side is O(buckets)
-        # and therefore grows with the corpus (the wrong shape at 100 TB).
-        # Same-process pair at the 100x point: capped 68.7s vs uncapped
-        # 98.7s — the candidate cut pays for the window (SCALE.md r7).
-        #
-        # Skew trade-off (r7 ADVICE): the count-window funnels each
-        # bucket into one task with no partial aggregation, so the
-        # degenerate bucket the cap neutralizes is itself a one-task
-        # hotspot DURING the count. That is bounded and linear — the
-        # task counts m posting rows (12 bytes each) and emits them;
-        # the alternative it replaces is the self-join producing
-        # m(m-1)/2 pairs from the same partition, which no partial agg
-        # helps either. Measured with a planted O(n)-sized bucket
-        # (SCALE.md r8 planted-bucket experiment): the window stays a
-        # small constant of the scan while the uncapped join diverges
-        # quadratically.
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "sig")
-        buckets = (
-            buckets.withColumn("_bn", F.count("*").over(w))
-            .filter(F.col("_bn") <= max_band_bucket)
-            .drop("_bn")
-        )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+    buckets = _cap_band_buckets(
+        lsh_band_buckets(per_doc, id_col, bands, rows), ("band", "sig"), max_band_bucket
     )
     # packed verification (r6): at high true-dup density the verify
     # join dominates — measured 649s exploded vs 228.6s packed at the
     # 100x point's 31M candidates (SCALE.md). Packs come straight off
     # the fused per-doc aggregation — no second groupBy over the
     # shingle rows (r15).
-    packs = per_doc.select(F.col(id_col), F.col("hs"))
-    result = _verify_jaccard_from_packs(cand, packs, packs, id_col, threshold)
+    result = _band_pairs(buckets, buckets, per_doc, per_doc, id_col, threshold, pred="self")
     # expose the persisted per-doc frame for release (r12 review fix —
     # same convention as indexed_near_dup_pairs): CacheManager entries
     # are never GC'd, so a long-lived ingest loop calling this per
@@ -439,50 +408,93 @@ def sql_recommended_max_band_bucket(table: str, floor: int = 64) -> str:
     )
 
 
-def _verify_jaccard(cand: DataFrame, sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Exact Jaccard over the (hashed) shingle sets for candidate pairs
-    only — ``sh`` is (id, h) from :func:`doc_shingle_hashes`, so the
-    intersection join keys on int64."""
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("h"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("h"))
-    inter = (
-        cand.join(sa, "id_a")
-        .join(sb, ["id_b", "h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def _verify_jaccard_packed(
-    cand: DataFrame, sh: DataFrame, id_col: str, threshold: float
+def _cap_band_buckets(
+    buckets: DataFrame, keys: tuple[str, ...], max_band_bucket: int | None
 ) -> DataFrame:
-    """Exact Jaccard verification via PACKED per-doc hash arrays: the
-    candidate pairs join to one array row per side and the intersection
-    runs JVM-side (``array_intersect``) — two |cand|-row joins instead
-    of exploding every pair back into pair x shingle rows (the
-    ``q_dedup_prefix_filter_join`` r5 technique; measured ~5x faster
-    than the exploded join at 10x on the banded-simhash verify, where
-    true-dup density makes |cand| large). Semantically identical to
-    :func:`_verify_jaccard`: per-doc hashes are distinct, so the
-    intersect size equals the exploded join's match count."""
-    packs = sh.groupBy(id_col).agg(F.collect_list("h").alias("hs"))
-    return _verify_jaccard_from_packs(cand, packs, packs, id_col, threshold)
+    """Drop every posting of a band bucket (rows sharing ``keys``) that
+    holds more than ``max_band_bucket`` docs; ``None`` keeps them all.
+
+    Window form: ONE shuffle on the bucket key — the same partitioning
+    the candidate self-join needs — instead of a groupBy + broadcast
+    semi-join, whose build side is O(buckets) and therefore grows with
+    the corpus (the wrong shape at 100 TB). Same-process pair at the
+    100x point: capped 68.7s vs uncapped 98.7s — the candidate cut pays
+    for the window (SCALE.md r7).
+
+    Skew trade-off (r7 ADVICE): the count-window funnels each bucket
+    into one task with no partial aggregation, so the degenerate bucket
+    the cap neutralizes is itself a one-task hotspot DURING the count.
+    That is bounded and linear — the task counts m posting rows and
+    emits them; the alternative it replaces is the self-join producing
+    m(m-1)/2 pairs from the same partition, which no partial agg helps
+    either. Measured with a planted O(n)-sized bucket (SCALE.md r8
+    planted-bucket experiment): the window stays a small constant of
+    the scan while the uncapped join diverges quadratically."""
+    if max_band_bucket is None:
+        return buckets
+    from pyspark.sql import Window
+
+    return (
+        buckets.withColumn("_bn", F.count("*").over(Window.partitionBy(*keys)))
+        .filter(F.col("_bn") <= max_band_bucket)
+        .drop("_bn")
+    )
+
+
+def _band_pairs(
+    a_buckets: DataFrame,
+    b_buckets: DataFrame,
+    a_packs: DataFrame,
+    b_packs: DataFrame,
+    id_col: str,
+    threshold: float,
+    *,
+    pred: str | None = None,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one MinHash-LSH pair kernel: band-posting join, id predicate,
+    ``distinct``, packed exact-Jaccard verify. Returns ``(id_a, id_b,
+    jaccard >= threshold)`` with ``id_a`` from the ``a`` side.
+
+    Postings are ``(id, band, sig, *keys)`` frames (the ``keys`` are
+    extra equality join columns, e.g. blocks); packs are ``(id, hs)``.
+    ``pred`` selects the id predicate:
+
+    * ``None`` — cross: ``a`` and ``b`` hold disjoint document sets;
+    * ``"self"`` — ``a`` and ``b`` are the same set: ``a.id < b.id``;
+    * ``"batch"`` — ``a`` is a batch and ``b`` the stored set it is
+      folded into: the probe runs against ``b ∪ a`` in ONE join, stored
+      rows pairing freely and the batch's own rows only as
+      ``a.id < b.id`` — cross UNION self in one candidate join and one
+      verify. Stored postings and packs whose id is in the batch are
+      dropped first (broadcast left-anti on the batch ids), so a batch
+      replayed against an index that already holds it yields exactly
+      the clean run's pairs, never ``(x, x)``, reversed or doubled
+      rows."""
+    if pred == "batch":
+        batch_ids = F.broadcast(a_packs.select(id_col))
+        b_buckets = (
+            b_buckets.join(batch_ids, id_col, "left_anti")
+            .withColumn("_from_stored", F.lit(True))
+            .unionByName(a_buckets.withColumn("_from_stored", F.lit(False)))
+        )
+        b_packs = b_packs.join(batch_ids, id_col, "left_anti").unionByName(a_packs)
+    a = a_buckets.alias("a")
+    b = b_buckets.alias("b")
+    cond = (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig"))
+    for k in keys:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    if pred == "self":
+        cond = cond & lt
+    elif pred == "batch":
+        cond = cond & (F.col("b._from_stored") | lt)
+    cand = (
+        a.join(b, cond)
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+    return _verify_jaccard_from_packs(cand, a_packs, b_packs, id_col, threshold)
 
 
 def _verify_jaccard_from_packs(
@@ -492,10 +504,19 @@ def _verify_jaccard_from_packs(
     id_col: str,
     threshold: float,
 ) -> DataFrame:
-    """Packed-verify core with independent pack frames per pair side —
-    the self-join dedup operators pass the same frame twice; the
-    persisted-index search path passes batch packs / index packs so the
-    existing corpus is verified from stored arrays, never re-shingled."""
+    """The module's exact-Jaccard verifier: candidate ``(id_a, id_b)``
+    pairs join to ONE packed ``(id, hs)`` hash-array row per side and
+    the intersection runs JVM-side (``array_intersect``) — two
+    |cand|-row joins instead of exploding every pair back into pair x
+    shingle rows (the ``q_dedup_prefix_filter_join`` r5 technique;
+    SCALE.md measured the exploded join 2.8-5x slower wherever
+    true-dup density makes |cand| large). Per-doc hashes are distinct,
+    so the intersect size equals an exploded join's match count.
+
+    Pack frames are independent per pair side — the self-join operators
+    pass the same frame twice; the persisted-index search path passes
+    batch packs / index packs so the existing corpus is verified from
+    stored arrays, never re-shingled."""
     return (
         cand.join(
             packs_a.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
@@ -569,18 +590,9 @@ def incremental_near_dup_pairs(
     # groupBy(id) shuffle — see _per_doc_minhash / minhash_near_dup_pairs
     per_doc = _per_doc_minhash(sh, id_col, n_hashes).persist()
     buckets = lsh_band_buckets(per_doc, id_col, bands, rows)
-    bb = buckets.join(batch.select(id_col), id_col, "left_semi").alias("a")
-    be = buckets.join(existing.select(id_col), id_col, "left_semi").alias("b")
-    cand = (
-        bb.join(
-            be,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    packs = per_doc.select(F.col(id_col), F.col("hs"))
-    result = _verify_jaccard_from_packs(cand, packs, packs, id_col, threshold)
+    bb = buckets.join(batch.select(id_col), id_col, "left_semi")
+    be = buckets.join(existing.select(id_col), id_col, "left_semi")
+    result = _band_pairs(bb, be, per_doc, per_doc, id_col, threshold)
     result._pandas_aws_cached = (per_doc,)
     return result
 
@@ -1082,18 +1094,8 @@ def indexed_near_dup_pairs(
     # fused per-doc aggregation (r15): the batch's signature minima and
     # verify pack share ONE groupBy(id) shuffle — see _per_doc_minhash
     per_doc_b = _per_doc_minhash(sh_b, id_col, p["n_hashes"]).persist()
-    bb = lsh_band_buckets(per_doc_b, id_col, p["bands"], rows).alias("a")
-    be = index.buckets.alias("b")
-    cand = (
-        bb.join(
-            be,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    packs_b = per_doc_b.select(F.col(id_col), F.col("hs"))
-    result = _verify_jaccard_from_packs(cand, packs_b, index.packs, id_col, threshold)
+    bb = lsh_band_buckets(per_doc_b, id_col, p["bands"], rows)
+    result = _band_pairs(bb, index.buckets, per_doc_b, index.packs, id_col, threshold)
     result._pandas_aws_cached = (per_doc_b,)
     return result
 
@@ -1112,20 +1114,10 @@ def index_self_near_dup_pairs(index: DedupIndex, *, threshold: float = 0.8) -> D
     and the jaccard doubles are bit-identical. Works on a just-built
     in-memory index (frames read the build's cached per-doc row) and on
     a stored one (frames are parquet scans) alike."""
-    id_col = index.params["id_col"]
-    a = index.buckets.alias("a")
-    b = index.buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+    return _band_pairs(
+        index.buckets, index.buckets, index.packs, index.packs,
+        index.params["id_col"], threshold, pred="self",
     )
-    return _verify_jaccard_from_packs(cand, index.packs, index.packs, id_col, threshold)
 
 
 def index_cross_near_dup_pairs(
@@ -1142,22 +1134,7 @@ def index_cross_near_dup_pairs(
     :func:`append_dedup_index`. Pair-equivalent to
     ``indexed_near_dup_pairs`` on the same documents (sorted vs
     unsorted packs only — jaccard is order-insensitive)."""
-    if delta.params != index.params:
-        raise ValueError(
-            f"index recipe mismatch: delta {delta.params} vs stored {index.params}"
-        )
-    id_col = index.params["id_col"]
-    bb = delta.buckets.alias("a")
-    be = index.buckets.alias("b")
-    cand = (
-        bb.join(
-            be,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return _verify_jaccard_from_packs(cand, delta.packs, index.packs, id_col, threshold)
+    return _index_pairs(delta, index, threshold, None)
 
 
 def index_batch_near_dup_pairs(
@@ -1170,40 +1147,33 @@ def index_batch_near_dup_pairs(
     constrained to ``id_a < id_b``, exactly
     :func:`index_self_near_dup_pairs`'s ordering), and one packed
     verify reads ``id_a`` from the delta packs and ``id_b`` from the
-    stored-union-delta packs (ids disjoint by the append contract, so
-    each ``id_b`` matches exactly one pack — the same rows the two
-    separate verifies joined). Pair set and jaccard doubles are
+    stored-union-delta packs. Pair set and jaccard doubles are
     bit-identical to ``index_cross_near_dup_pairs(delta, index) UNION
     index_self_near_dup_pairs(delta)`` — the pre-r16 composition at
     every ingest call site paid two candidate joins, two distincts and
     four pack joins for the same result. Recipe equality asserted like
-    the composed operators."""
+    the composed operators.
+
+    Replay-safe: stored rows whose id is in the delta are excluded
+    before the probe (:func:`_band_pairs` batch mode), so re-running an
+    ingest whose append already landed returns exactly the clean run's
+    pairs — each ``id_b`` still matches exactly one pack."""
+    return _index_pairs(delta, index, threshold, "batch")
+
+
+def _index_pairs(
+    delta: DedupIndex, index: DedupIndex, threshold: float, pred: str | None
+) -> DataFrame:
+    """``delta`` probing ``index`` through :func:`_band_pairs`, after
+    the recipe-equality check the append path also makes."""
     if delta.params != index.params:
         raise ValueError(
             f"index recipe mismatch: delta {delta.params} vs stored {index.params}"
         )
-    id_col = index.params["id_col"]
-    bb = delta.buckets.alias("a")
-    be = (
-        index.buckets.withColumn("_from_stored", F.lit(True))
-        .unionByName(delta.buckets.withColumn("_from_stored", F.lit(False)))
-        .alias("b")
+    return _band_pairs(
+        delta.buckets, index.buckets, delta.packs, index.packs,
+        index.params["id_col"], threshold, pred=pred,
     )
-    cand = (
-        bb.join(
-            be,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (
-                F.col("b._from_stored")
-                | (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            ),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    packs_b = index.packs.unionByName(delta.packs)
-    return _verify_jaccard_from_packs(cand, delta.packs, packs_b, id_col, threshold)
 
 
 def release_cached_inputs(df: DataFrame) -> None:
@@ -1300,8 +1270,8 @@ def simhash_near_dup_pairs(
         )
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
     )
-    sh = doc_shingle_hashes(df, id_col, text_col, shingle_k)
-    return _verify_jaccard(cand, sh, id_col, threshold)
+    packs = _per_doc_minhash(doc_shingle_hashes(df, id_col, text_col, shingle_k), id_col, 0)
+    return _verify_jaccard_from_packs(cand, packs, packs, id_col, threshold)
 
 
 def simhash60(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1397,20 +1367,7 @@ def simhash_banded_near_dup_pairs(
         "sig",
         F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
     ).withColumn("bits", F.expr(f"shiftright(sig, {band_bits} * band) & {mask}"))
-    if max_band_bucket is not None:
-        # window form for the same reason as minhash_near_dup_pairs:
-        # one (band, bits) shuffle, no O(buckets) broadcast build side
-        # (and the same single-task-per-bucket skew trade-off, measured
-        # linear in the planted-bucket experiment — see the comment
-        # there).
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bits")
-        buckets = (
-            buckets.withColumn("_bn", F.count("*").over(w))
-            .filter(F.col("_bn") <= max_band_bucket)
-            .drop("_bn")
-        )
+    buckets = _cap_band_buckets(buckets, ("band", "bits"), max_band_bucket)
     a = buckets.select(
         F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"), "band", "bits"
     )
@@ -1433,8 +1390,8 @@ def simhash_banded_near_dup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    sh = doc_shingle_hashes(df, id_col, text_col, shingle_k)
-    return _verify_jaccard_packed(cand, sh, id_col, threshold)
+    packs = _per_doc_minhash(doc_shingle_hashes(df, id_col, text_col, shingle_k), id_col, 0)
+    return _verify_jaccard_from_packs(cand, packs, packs, id_col, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -1541,8 +1498,8 @@ def blocked_ngram_jaccard_pairs(
         F.col("_blk_n"),
         F.explode(hashed_grams).alias("g"),
     )
-    # sizes over ALL docs (both branches verify against the same
-    # denominator); gram sets are identical in either branch.
+    # gram-set sizes for the exact branch's denominator (the LSH
+    # branch's packed verify takes the same sizes off its packs)
     sizes = grams.groupBy(id_col).agg(F.count("*").alias("n_g"))
 
     # --- exact branch: all-pairs gram self-join, small blocks only
@@ -1560,87 +1517,9 @@ def blocked_ngram_jaccard_pairs(
         .agg(F.count("*").alias("n_common"))
     )
 
-    if lsh_fallback:
-        # --- LSH branch: oversized blocks, candidates from banded
-        # MinHash over the hashed gram sets (28-bit base hash + affine
-        # family — the q_dedup_minhash_lsh machinery), buckets keyed on
-        # the block so candidates never cross it ---
-        rows = n_hashes // bands
-        big = grams.filter(F.col("_blk_n") > cap)
-        hashed = big.select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            F.col("g").alias("_h"),  # grams are already 28-bit hashes
-        )
-        aggs = [
-            F.min(
-                (F.lit(_MINHASH_A[j]) * F.col("_h") + F.lit(_MINHASH_B[j])) % MINHASH_P
-            ).alias(f"h{j}")
-            for j in range(n_hashes)
-        ]
-        sig = hashed.groupBy(F.col(id_col), *[F.col(c) for c in block_cols]).agg(*aggs)
-
-        def band_sig(bi: int) -> Column:
-            s = F.col(f"h{bi * rows}")
-            for r in range(1, rows):
-                s = s * MINHASH_P + F.col(f"h{bi * rows + r}")
-            return s
-
-        entries = F.array(
-            *[
-                F.struct(F.lit(bi).alias("band"), band_sig(bi).alias("sig"))
-                for bi in range(bands)
-            ]
-        )
-        buckets = sig.select(
-            F.col(id_col), *[F.col(c) for c in block_cols], F.explode(entries).alias("e")
-        ).select(
-            id_col,
-            *block_cols,
-            F.col("e.band").alias("band"),
-            F.col("e.sig").alias("sig"),
-        )
-        ba = buckets.alias("ba")
-        bb = buckets.alias("bb")
-        bcond = (
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col(f"ba.{id_col}") < F.col(f"bb.{id_col}"))
-        )
-        for c in block_cols:
-            bcond = bcond & (F.col(f"ba.{c}") == F.col(f"bb.{c}"))
-        cand = (
-            ba.join(bb, bcond)
-            .select(
-                F.col(f"ba.{id_col}").alias("id_a"), F.col(f"bb.{id_col}").alias("id_b")
-            )
-            .distinct()
-        )
-        # exact-gram intersection for the LSH candidates only — packed
-        # per-doc gram arrays + array_intersect (two |cand|-row joins,
-        # no pair x gram explode; grams are per-doc distinct so the
-        # intersect size equals the exploded join's match count)
-        gpacks = grams.groupBy(id_col).agg(F.collect_list("g").alias("gs"))
-        lsh_inter = (
-            cand.join(
-                gpacks.select(F.col(id_col).alias("id_a"), F.col("gs").alias("gs_a")),
-                "id_a",
-            )
-            .join(
-                gpacks.select(F.col(id_col).alias("id_b"), F.col("gs").alias("gs_b")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("gs_a", "gs_b")).cast("long").alias("n_common"),
-            )
-        )
-        inter = inter.unionByName(lsh_inter)
-
     na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_g").alias("n_a"))
     nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_g").alias("n_b"))
-    return (
+    pairs = (
         inter.join(F.broadcast(na), "id_a")
         .join(F.broadcast(nb), "id_b")
         .select(
@@ -1652,6 +1531,24 @@ def blocked_ngram_jaccard_pairs(
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
+    )
+    if not lsh_fallback:
+        return pairs
+    # --- LSH branch: oversized blocks through the MinHash-LSH kernel —
+    # one fused per-doc row (signature minima over the hashed grams +
+    # the verify pack, block columns carried), band postings keyed on
+    # the block as well so candidates never cross it, packed exact
+    # verify of the candidates only ---
+    big = grams.filter(F.col("_blk_n") > cap).select(
+        F.col(id_col), *[F.col(c) for c in block_cols], F.col("g").alias("h")
+    )
+    per_doc = _per_doc_minhash(big, id_col, n_hashes, keys=tuple(block_cols))
+    buckets = _band_buckets(per_doc, [id_col, *block_cols], bands, n_hashes // bands)
+    return pairs.unionByName(
+        _band_pairs(
+            buckets, buckets, per_doc, per_doc, id_col, threshold,
+            pred="self", keys=tuple(block_cols),
+        )
     )
 
 
@@ -1892,7 +1789,12 @@ def merge_cluster_labels(
     raw = _read_raw_cluster_labels(spark, path, root=root, exclude_batch=batch_id)
     delta, seq = _cluster_merge_delta(pairs, raw, max_iter=max_iter)
     # localCheckpoint BEFORE the write: the delta plan reads the
-    # clusters directory the write lands in.
+    # clusters directory the write lands in. This checkpoint must stay
+    # EAGER: its job is also what materializes the LAZY ``touched`` /
+    # ``mini`` checkpoints inside _cluster_merge_delta, so every read of
+    # the stored labels happens before batch=<id> is overwritten. A
+    # lazy one here would leave those reads to the write job itself —
+    # a read-under-overwrite of the label artifact on a retry.
     out = delta.localCheckpoint()
     if out.limit(1).count():
         out.withColumn("seq", F.lit(seq).cast("long")).write.mode(

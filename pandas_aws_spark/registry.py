@@ -208,33 +208,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # "did the physical plan change" is a fact about the round's git
 # diff, not about disk state.
 _REWRITTEN_THIS_ROUND: dict[str, int] = {
-    # (r15's 25 rewrites re-verified green in CORRECTNESS_r15.json —
+    # (r16's 10 rewrites re-verified green in CORRECTNESS_r16.json —
     # cleared per the self-expiry protocol.)
-    # r16 OPTIMIZATION round — interpreted-HOF cost cuts in the PQ
-    # paths (guide §1.2 per-task work): the argmin over scored
-    # sub-centroids became a single-reference array_min (same
-    # total-order struct min as the r15 fold, which evaluated its
-    # scored subtree three times per row under interpreted HOF
-    # evaluation); the broadcast codebook is indexed by subspace
-    # (per-row filter over all m x k entries -> O(1) F.get); the codes
-    # column is ONE transform over sequence(0, m-1) instead of m
-    # inlined argmin copies; both ADC shortlist windows order by
-    # asc_nulls_last (fail-safe only — no live row moves). Codes,
-    # distances and every returned row are bit-identical (oracle
-    # hash-match at sf0.001 and sf0.01 on all ten plus the cluster
-    # lifecycle cohort). tools/diff_plans.py base(c814384)->HEAD:
-    # 10 rewritten, 0 new, 0 removed, 230 unchanged (same-code double
-    # dump control: 0/240).
-    "q_sim_index_build_adaptive": 16,
-    "q_sim_index_evolved": 16,
-    "q_sim_index_filtered": 16,
-    "q_sim_index_ingest": 16,
-    "q_sim_index_rebuild": 16,
-    "q_sim_index_rebuild_adaptive": 16,
-    "q_sim_index_snapshot": 16,
-    "q_sim_ivf_pq": 16,
-    "q_sim_ivf_pq_trained": 16,
-    "q_sim_pq_adc": 16,
+    # r17 SIMPLICITY round — one MinHash-LSH pair kernel in
+    # operators/dedup.py (_band_pairs): the blocked n-gram LSH branch
+    # now runs through it (fused per-doc minima + verify pack with the
+    # block columns carried, block-keyed band join, packed verify)
+    # instead of its own band_sig/bucket/join copy and a separate
+    # all-docs pack aggregation. tools/diff_plans.py base(6d83e68)->HEAD:
+    # 1 rewritten, 0 new, 0 removed, 239 unchanged (same-code double
+    # dump control: 0/240). The replay fix in index_batch_near_dup_pairs
+    # runs inside the lifecycle entries, not in their returned plans —
+    # those re-verify through _SUBSTRATE_OWNERSHIP (dedup.py changed).
+    "q_dedup_ngram_jaccard": 17,
 }
 
 # ---------------------------------------------------------------------------

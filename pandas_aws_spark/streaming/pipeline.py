@@ -511,9 +511,11 @@ def stream_dedup_ingest(
     component — is that of the union corpus however the file-to-
     trigger split lands. Replay after a crash between the merge and
     the append also converges: the cluster delta recomputes from the
-    OTHER batches' state, and a replayed index probe that already sees
-    its own rows only adds batch-internal edges the internal scan
-    contributes anyway (same connectivity)."""
+    OTHER batches' state, and the pair pass drops the stored copies of
+    the batch's own ids before probing (``index_batch_near_dup_pairs``),
+    so a replay against an index that already holds the batch yields
+    exactly the clean run's pairs — no self pairs, reversed or doubled
+    rows."""
     from ..operators.dedup import (
         append_dedup_index,
         build_dedup_index,

@@ -103,7 +103,9 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
 
 # Spark type -> warehouse DDL type. Fixes the reference's lossiness
 # (redshift.py:105-108): int64 keeps BIGINT (not INTEGER), float64
-# keeps DOUBLE PRECISION (not 4-byte REAL).
+# keeps DOUBLE PRECISION (not 4-byte REAL). Spark SQL has no
+# ``DOUBLE PRECISION`` (PARSE_SYNTAX_ERROR at 'PRECISION'), so the
+# spark dialect spells the same 8-byte type ``DOUBLE``.
 _DDL_TYPES: list[tuple[type, str]] = [
     (T.LongType, "BIGINT"),
     (T.IntegerType, "INTEGER"),
@@ -120,6 +122,8 @@ _DDL_TYPES: list[tuple[type, str]] = [
 def _ddl_type(dt: T.DataType, dialect: str) -> str:
     if isinstance(dt, T.DecimalType):
         return f"DECIMAL({dt.precision},{dt.scale})"
+    if isinstance(dt, T.DoubleType) and dialect == "spark":
+        return "DOUBLE"
     for spark_t, ddl in _DDL_TYPES:
         if isinstance(dt, spark_t):
             return ddl

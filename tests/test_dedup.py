@@ -991,3 +991,44 @@ def test_index_batch_pairs_match_cross_union_self(spark, tmp_path):
         index_batch_near_dup_pairs(bad, stored, threshold=0.8)
     bad.release_cache()
     delta.release_cache()
+
+
+def test_index_batch_pairs_replay_matches_clean_run(spark, sf_dir, tmp_path):
+    """A foreachBatch replay after a crash between the label merge and
+    the append runs the pair pass again against an index that already
+    holds the batch. The pass must return exactly the clean run's rows:
+    no ``(x, x)`` self pairs, no reversed copies of batch-internal
+    pairs, no doubled rows from a second pack per id."""
+    from pandas_aws_spark.operators.dedup import (
+        append_dedup_index,
+        build_dedup_index,
+        index_batch_near_dup_pairs,
+        read_dedup_index,
+        write_dedup_index,
+    )
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corpus = docs.filter(F.col("doc_id") % 4 != 0)
+    batch = docs.filter(F.col("doc_id") % 8 == 0)
+    recipe = dict(shingle_k=3, n_hashes=8, bands=4)
+    path = str(tmp_path / "idx")
+    write_dedup_index(build_dedup_index(corpus, "doc_id", "text", **recipe), path)
+
+    def rows(df):
+        return sorted((r.id_a, r.id_b, r.jaccard) for r in df.collect())
+
+    delta = build_dedup_index(batch, "doc_id", "text", **recipe)
+    clean = rows(index_batch_near_dup_pairs(delta, read_dedup_index(spark, path)))
+    batch_ids = {r.doc_id for r in batch.select("doc_id").collect()}
+    # non-vacuous: both batch-internal and batch-vs-index pairs exist
+    assert any(b in batch_ids for _, b, _ in clean)
+    assert any(b not in batch_ids for _, b, _ in clean)
+    append_dedup_index(delta, path, batch_id="b1")  # the crashed attempt's append
+
+    replay_delta = build_dedup_index(batch, "doc_id", "text", **recipe)
+    replay = rows(
+        index_batch_near_dup_pairs(replay_delta, read_dedup_index(spark, path))
+    )
+    replay_delta.release_cache()
+    assert replay == clean

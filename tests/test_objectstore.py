@@ -280,3 +280,31 @@ def test_read_prefix_lineage_mixed_suffix_segment_is_contributed(spark, fdf, tmp
     }
     assert out["obj"] == ("csv", "contributed", 4)
     assert out["both"] == ("mixed", "contributed", 8)
+
+
+def test_prefix_readers_agree_on_scheme_less_and_file_uri(spark, fdf, tmp_path):
+    """A scheme-less base and its ``file://`` spelling name the same
+    objects: ``list_keys`` and both of its callers (``read_df_from_prefix``
+    and ``read_prefix_lineage``) must return the same keys and rows.
+    Hadoop lists qualified paths (``file:/...``), so an unqualified base
+    once matched none of them and every call came back empty."""
+    from pandas_aws_spark.objectstore import read_prefix_lineage
+
+    write_df(fdf, f"file://{tmp_path}/pm/p/a.csv", format="csv")
+    write_df(fdf, f"file://{tmp_path}/pm/p/b.csv", format="csv")
+    write_df(fdf, f"file://{tmp_path}/pm/q.csv", format="csv")
+    schema = "col_1 long, col_2 string"
+    got = {}
+    for form, base in (("plain", str(tmp_path / "pm")), ("file", f"file://{tmp_path}/pm")):
+        got[form] = (
+            list_keys(spark, base, prefix="p/", suffix=".csv"),
+            _collect_sorted(
+                read_df_from_prefix(spark, base, prefix="p/", suffix=".csv", schema=schema)
+            ),
+            _collect_sorted(read_prefix_lineage(spark, base, suffix=".csv", schema=schema)),
+        )
+    keys, rows, lineage = got["file"]
+    assert len(keys) == 2 and all(k.startswith(("p/a.csv/", "p/b.csv/")) for k in keys)
+    assert rows == sorted(_collect_sorted(fdf) * 2)
+    assert {r[0]: r[3] for r in lineage} == {"p": 8, "q.csv": 4}
+    assert got["plain"] == got["file"]

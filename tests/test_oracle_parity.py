@@ -10,7 +10,11 @@ then this round's rewritten plans, then oldest evidence) plus every
 headline entry. That is exactly the set whose hashes the next
 CORRECTNESS file re-attests, i.e. the highest-value oracle coverage
 per minute; every other entry holds green on-disk evidence from a
-prior round's CORRECTNESS file (the rotation's invariant). The FULL
+prior round's CORRECTNESS file (the rotation's invariant). The scope
+also keeps the window's oldest-evidence block as it stands before any
+rewrite (``_stalest_rechecks``): a change to a substrate module fills
+the window with the entries it owns, and without that block the same
+change would drop the stalest re-checks from the local gate. The FULL
 240-entry sweep is unchanged and one switch away:
 
     PANDAS_AWS_FULL_PARITY=1 python -m pytest tests/test_oracle_parity.py
@@ -24,12 +28,27 @@ import os
 import pytest
 
 from pandas_aws_spark.oracle import check_query, duckdb_connection
-from pandas_aws_spark.registry import derive_driver_window, load_registry
+from pandas_aws_spark.registry import (
+    _WINDOW_SIZE,
+    derive_driver_window,
+    evidence_rounds,
+    load_registry,
+)
 
 REGISTRY = load_registry()
 
+
+def _stalest_rechecks() -> set[str]:
+    """The ``_WINDOW_SIZE`` verified entries with the oldest green
+    evidence, ties by name: the window's re-check block when no entry
+    is new or rewritten."""
+    latest = evidence_rounds()
+    pool = sorted((n for n in REGISTRY if n in latest), key=lambda n: (latest[n], n))
+    return set(pool[:_WINDOW_SIZE])
+
+
 _FULL = os.environ.get("PANDAS_AWS_FULL_PARITY", "") == "1"
-_DEFAULT = set(derive_driver_window()) | {
+_DEFAULT = set(derive_driver_window()) | _stalest_rechecks() | {
     n for n, s in REGISTRY.items() if s.headline
 }
 _SCOPE = sorted(REGISTRY) if _FULL else sorted(_DEFAULT & set(REGISTRY))
@@ -44,14 +63,15 @@ def con(sf_dir):
 
 def test_default_scope_is_driver_window_plus_headline():
     """The subset contract stays honest: the default parametrization is
-    exactly the driver's window union the headline set — if the window
-    derivation changes, this test recomputes with it; if an entry is in
-    neither, it relies on prior-round CORRECTNESS evidence, which
-    ``derive_driver_window`` rotates by staleness."""
+    exactly the driver's window union the stalest re-checks union the
+    headline set — if the window derivation changes, this test
+    recomputes with it; if an entry is in none, it relies on
+    prior-round CORRECTNESS evidence, which ``derive_driver_window``
+    rotates by staleness."""
     if _FULL:
         assert set(_SCOPE) == set(REGISTRY)
     else:
-        assert set(_SCOPE) == (set(derive_driver_window()) | {
+        assert set(_SCOPE) == (set(derive_driver_window()) | _stalest_rechecks() | {
             n for n, s in REGISTRY.items() if s.headline
         })
         assert len(_SCOPE) >= 50

@@ -4,6 +4,9 @@ query, and the upsert merge-semantics matrix from FIXTURES.md §A
 
 from __future__ import annotations
 
+from datetime import date, datetime
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import types as T
 
@@ -286,3 +289,50 @@ def test_upsert_crash_after_commit_serves_new_rows(spark, wc, monkeypatch):
     rows = sorted((r.pk, r.payload) for r in spark.table("t_gc").collect())
     assert rows == [(1, "NEW"), (2, "TWO")]
     wc.drop_table("t_gc")
+
+
+# One sample value per DDL mapping: (spark type, value, redshift DDL).
+# Every type _DDL_TYPES names must appear here (pinned below), plus the
+# two mappings _ddl_type handles outside the table: decimal and string.
+_DTYPE_CASES = {
+    "long": (T.LongType(), 2**40 + 1, "BIGINT"),
+    "int": (T.IntegerType(), 123456, "INTEGER"),
+    "short": (T.ShortType(), 1234, "SMALLINT"),
+    "byte": (T.ByteType(), 12, "SMALLINT"),
+    "double": (T.DoubleType(), 0.1 + 1e-12, "DOUBLE PRECISION"),
+    "float": (T.FloatType(), 1.5, "REAL"),
+    "bool": (T.BooleanType(), True, "BOOLEAN"),
+    "timestamp": (T.TimestampType(), datetime(2024, 1, 2, 3, 4, 5), "TIMESTAMP"),
+    "date": (T.DateType(), date(2024, 1, 2), "DATE"),
+    "decimal": (T.DecimalType(10, 2), Decimal("12.34"), "DECIMAL(10,2)"),
+    "string": (T.StringType(), "x", "VARCHAR(65535)"),
+}
+
+
+def test_dtype_cases_cover_every_ddl_type():
+    from pandas_aws_spark.warehouse import _DDL_TYPES
+
+    covered = {type(dt) for dt, _, _ in _DTYPE_CASES.values()}
+    assert {t for t, _ in _DDL_TYPES} <= covered
+
+
+@pytest.mark.parametrize("case", sorted(_DTYPE_CASES))
+def test_create_upload_upsert_query_roundtrip_per_dtype(spark, wc, case):
+    """Each mapped type round-trips create_table -> upload -> upsert ->
+    query_df in the spark dialect (Spark SQL rejects the Redshift
+    spelling ``DOUBLE PRECISION``), while the redshift dialect strings
+    stay pinned."""
+    dt, value, redshift_ddl = _DTYPE_CASES[case]
+    schema = T.StructType([T.StructField("pk", T.LongType()), T.StructField("v", dt)])
+    assert schema_to_ddl(schema, dialect="redshift") == f"pk BIGINT, v {redshift_ddl}"
+
+    name = f"t_dtype_{case}"
+    df = spark.createDataFrame([(1, value), (2, value)], schema)
+    wc.create_table(df, name, overwrite=True)
+    wc.upload(df, name, mode="append")
+    wc.upsert(spark.createDataFrame([(2, None), (3, value)], schema), name, keys=["pk"])
+    rows = sorted(
+        (r.pk, r.v) for r in wc.query_df(f"SELECT pk, v FROM {name}").collect()
+    )
+    assert rows == [(1, value), (2, None), (3, value)]
+    wc.drop_table(name)
