@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import bounded_window_key
 from ..functions.texthash import char_ngrams, seeded_md5, tokens, word_shingles
@@ -1498,14 +1499,13 @@ def blocked_ngram_jaccard_pairs(
         F.col("_blk_n"),
         F.explode(hashed_grams).alias("g"),
     )
-    # gram-set sizes for the exact branch's denominator (the LSH
-    # branch's packed verify takes the same sizes off its packs)
-    sizes = grams.groupBy(id_col).agg(F.count("*").alias("n_g"))
-
     # --- exact branch: all-pairs gram self-join, small blocks only
     # (with lsh_fallback=False every _blk_n is 0 = "small": the whole
     # corpus takes this branch under the fail-fast guard) ---
     small = grams.filter(F.col("_blk_n") <= cap)
+    # gram-set sizes for this branch's denominator only (the LSH
+    # branch's packed verify takes its sizes off its packs)
+    sizes = small.groupBy(id_col).agg(F.count("*").alias("n_g"))
     a = small.alias("a")
     b = small.alias("b")
     cond = (F.col("a.g") == F.col("b.g")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -1557,22 +1557,108 @@ def blocked_ngram_jaccard_pairs(
 # --------------------------------------------------------------------------
 
 
+#: Largest pair graph (distinct directed edges) that cluster labelling
+#: pulls onto the driver. At or below it, :func:`connected_components`
+#: and :func:`merge_cluster_labels` collect the edges in one action and
+#: label them in Python; above it, the distributed label propagation
+#: runs. The distributed loop pays ~8 Spark jobs per round, which at
+#: small sizes is all scheduling latency; the driver path's cost grows
+#: with the edge count. Measured crossover on 4 cores: CHANGES.md.
+_DRIVER_CC_MAX_EDGES = 200_000
+
+
+def _collect_capped(edges: DataFrame) -> "list[tuple] | None":
+    """The rows of ``edges`` as tuples when there are at most
+    :data:`_DRIVER_CC_MAX_EDGES`, else None — one action, and never more
+    than the cap + 1 rows reach the driver. ``edges`` should end in an
+    exchange (a ``distinct``) so AQE coalesces a small input into one
+    partition and the capped take is a single job."""
+    rows = edges.limit(_DRIVER_CC_MAX_EDGES + 1).collect()
+    if len(rows) > _DRIVER_CC_MAX_EDGES:
+        return None
+    return [tuple(r) for r in rows]
+
+
+def _driver_components(edges, max_iter: int) -> dict:
+    """``{node: min node reachable}`` over undirected ``edges``: a BFS
+    from each component's min node (nodes visited in ascending order),
+    so the BFS depth is exactly the number of rounds the distributed
+    min-label propagation needs. Raises the same ``RuntimeError`` as
+    :func:`connected_components` exactly when that loop would: some
+    component's hop depth from its min node is >= ``max_iter``."""
+    adj: dict = {}
+    for u, v in edges:
+        adj.setdefault(u, []).append(v)
+        adj.setdefault(v, []).append(u)
+    label: dict = {}
+    late = 0
+    for root in sorted(adj):
+        if root in label:
+            continue
+        label[root] = root
+        frontier, hops = [root], 0
+        while frontier:
+            nxt = []
+            for x in frontier:
+                for y in adj[x]:
+                    if y not in label:
+                        label[y] = root
+                        nxt.append(y)
+            hops += 1
+            if nxt and hops >= max_iter:
+                late += len(nxt)
+            frontier = nxt
+    if late:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"({late} labels still changing); the pair graph has a "
+            f"component with diameter > {max_iter} — raise max_iter."
+        )
+    return label
+
+
+def _label_frame(spark, rows, schema) -> DataFrame:
+    """A frame of driver-built label rows in ONE partition: a label
+    batch written from it lands as one parquet file. Built from an
+    Arrow table, which reaches the JVM without the Python workers a
+    list-of-tuples frame starts for its first job."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.table({f.name: list(c) for f, c in zip(schema.fields, cols)})
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
 def connected_components(
     pairs: DataFrame, *, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 20
 ) -> DataFrame:
     """Cluster near-dup pairs transitively: (doc_id, cluster_id) where
     cluster_id = min doc id reachable through the pair graph.
 
-    Iterative min-label propagation: each round, every node adopts the
-    smallest label among itself and its neighbors, so the minimum
-    advances one hop per round — O(diameter) rounds. Dedup graphs have
-    small, dense clusters (diameter << 20); for adversarial chain-shaped
-    graphs raise ``max_iter`` — non-convergence raises rather than
-    returning wrong labels. Each round is one join + one groupBy over the EDGE list —
-    never a transitive-closure materialization — so at corpus scale the
-    cost is rounds x O(|edges|) shuffle. The loop checks convergence
-    via a count of changed labels (a driver-side scalar, not data) and
-    localCheckpoints each round to keep lineage flat.
+    Small graphs (at most :data:`_DRIVER_CC_MAX_EDGES` distinct directed
+    edges) are labelled on the driver: one capped collect of the edges,
+    then a BFS from each component's min node. The cap bounds what
+    reaches the driver, not the data — a larger graph is never
+    collected, it takes the distributed path below — so this stays a
+    bounded driver step, not a driver-side collection of corpus data.
+    The result is a one-partition frame of the same ``(doc_id,
+    cluster_id)`` columns and types.
+
+    Distributed path — iterative min-label propagation: each round,
+    every node adopts the smallest label among itself and its
+    neighbors, so the minimum advances one hop per round —
+    O(diameter) rounds. Each round is one join + one groupBy over the
+    EDGE list — never a transitive-closure materialization — so at
+    corpus scale the cost is rounds x O(|edges|) shuffle. The loop
+    checks convergence via a count of changed labels (a driver-side
+    scalar, not data) and localCheckpoints each round to keep lineage
+    flat.
+
+    Dedup graphs have small, dense clusters (diameter << 20); for
+    adversarial chain-shaped graphs raise ``max_iter``. On both paths
+    non-convergence raises rather than returning wrong labels: a
+    component whose hop depth from its min node is >= ``max_iter``
+    raises ``RuntimeError``.
     """
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
@@ -1581,11 +1667,20 @@ def connected_components(
         # pinned ONCE (r15, guide §5): every iteration's join otherwise
         # re-evaluates the full upstream pair plan — for the bootstrap
         # CC that is the entire minhash candidate+verify pipeline — plus
-        # this distinct's exchange, once per round. One materialization
-        # instead of O(rounds); same executor-storage class as the
-        # per-round label checkpoint below.
-        .localCheckpoint()
+        # this distinct's exchange, once per round. Lazy: the capped
+        # collect below materializes it, so a graph over the cap runs
+        # the pair plan once, not once for the collect and once more
+        # for the propagation.
+        .localCheckpoint(eager=False)
     )
+    rows = _collect_capped(edges)
+    if rows is not None and not any(None in r for r in rows):
+        dtype = edges.schema["u"].dataType
+        schema = T.StructType(
+            [T.StructField("doc_id", dtype), T.StructField("cluster_id", dtype)]
+        )
+        labels = _driver_components(rows, max_iter)
+        return _label_frame(pairs.sparkSession, list(labels.items()), schema)
     labels = edges.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("label")
     )
@@ -1719,7 +1814,13 @@ def init_cluster_labels(pairs: DataFrame, path: str, *, max_iter: int = 20) -> N
     ever needs), written as ``clusters/batch=base`` with ``seq=1``
     INSIDE the current generation root. Re-running replaces any
     existing label state — generation-resident and legacy flat alike —
-    (single-writer, like every artifact op here)."""
+    (single-writer, like every artifact op here).
+
+    A pair graph within :data:`_DRIVER_CC_MAX_EDGES` is labelled on the
+    driver (one capped collect; the cap bounds what reaches the driver,
+    larger graphs run the distributed propagation) and written as a
+    single file. Non-convergence within ``max_iter`` raises on both
+    paths, before any existing label state is deleted."""
     spark = pairs.sparkSession
     from . import genstore
 
@@ -1767,7 +1868,19 @@ def merge_cluster_labels(
     tests/test_dedup.py). Retry-idempotent: the delta recomputes from
     the other batches' state and overwrites its own ``batch=<id>``
     dir. ``batch_id='base'`` is reserved for
-    :func:`init_cluster_labels`."""
+    :func:`init_cluster_labels`.
+
+    Small deltas (at most :data:`_DRIVER_CC_MAX_EDGES` distinct new
+    edges) run the same algorithm with the graph work on the driver:
+    one capped collect of the edges, one collect of the endpoints'
+    stored labels and the max ``seq``, the rep-graph components in
+    Python, one pinned probe for the members of changed clusters, and
+    the delta written as one file. What reaches the driver is bounded
+    by the cap (edges, endpoints and their label rows); the member rows
+    stay on the executors, and a larger delta takes the distributed
+    path — so this is not a driver-side collection of corpus data.
+    Every read happens before ``batch=<id>`` is overwritten, and a rep
+    graph deeper than ``max_iter`` raises on both paths."""
     validate_ledger_batch_id(batch_id)
     spark = new_pairs.sparkSession
     from . import genstore
@@ -1776,9 +1889,12 @@ def merge_cluster_labels(
         new_pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        # lazy: the capped collect materializes it, so a delta over the
+        # cap evaluates the new-pairs plan once
+        .localCheckpoint(eager=False)
     )
-    if not pairs.limit(1).count():
+    rows = _collect_capped(pairs)
+    if rows == []:
         return
     # the delta lands WHERE the labels live — the generation-resident
     # dir for r13+ artifacts, the legacy flat dir until its first
@@ -1787,19 +1903,92 @@ def merge_cluster_labels(
     root = genstore.current_root(spark, path)
     cdir = _cluster_dir(spark, path, root) or f"{root}/clusters"
     raw = _read_raw_cluster_labels(spark, path, root=root, exclude_batch=batch_id)
+    if rows is not None:
+        out = _driver_merge_delta(pairs, rows, raw, max_iter=max_iter)
+        if out is not None:
+            out.write.mode("overwrite").parquet(f"{cdir}/batch={batch_id}")
+        return
     delta, seq = _cluster_merge_delta(pairs, raw, max_iter=max_iter)
-    # localCheckpoint BEFORE the write: the delta plan reads the
-    # clusters directory the write lands in. This checkpoint must stay
-    # EAGER: its job is also what materializes the LAZY ``touched`` /
-    # ``mini`` checkpoints inside _cluster_merge_delta, so every read of
-    # the stored labels happens before batch=<id> is overwritten. A
-    # lazy one here would leave those reads to the write job itself —
-    # a read-under-overwrite of the label artifact on a retry.
+    # Distributed path: localCheckpoint BEFORE the write: the delta
+    # plan reads the clusters directory the write lands in. This
+    # checkpoint must stay EAGER: its job is also what materializes the
+    # LAZY ``touched`` / ``mini`` checkpoints inside
+    # _cluster_merge_delta, so every read of the stored labels happens
+    # before batch=<id> is overwritten. A lazy one here would leave
+    # those reads to the write job itself — a read-under-overwrite of
+    # the label artifact on a retry.
     out = delta.localCheckpoint()
     if out.limit(1).count():
         out.withColumn("seq", F.lit(seq).cast("long")).write.mode(
             "overwrite"
         ).parquet(f"{cdir}/batch={batch_id}")
+
+
+def _driver_merge_delta(pairs, rows, raw, *, max_iter: int) -> "DataFrame | None":
+    """Driver-path twin of :func:`_cluster_merge_delta`, for ``rows``,
+    the collected distinct ``(u, v)`` edges of ``pairs``: the
+    one-partition ``(doc_id, cluster_id, seq)`` frame the batch must
+    write, or None when no label changes. Same label algebra: the
+    endpoints' labels and the rep-graph components are computed on the
+    driver; the members of changed clusters (as many as those clusters
+    hold, so not bounded by the edge cap) are probed from the stored
+    labels and pinned here, never collected. Nothing reads the label
+    artifact after this returns."""
+    spark = pairs.sparkSession
+    probe = pairs.select(F.col("u").alias("doc_id"))
+    if raw is not None:
+        probe = probe.unionByName(raw.select("doc_id"))
+    dtype = probe.schema["doc_id"].dataType
+
+    def schema(*names):
+        return T.StructType(
+            [T.StructField(n, T.LongType() if n == "seq" else dtype) for n in names]
+        )
+
+    ids = {x for e in rows for x in e}
+    cur, seq = {}, 1
+    if raw is not None:
+        # one action: the endpoints' stored rows (broadcast probe of
+        # the label artifact) plus the artifact's max seq
+        keys = _label_frame(spark, [(i,) for i in ids], schema("doc_id"))
+        top = raw.agg(F.max("seq").alias("seq")).select(
+            F.lit(None).cast(dtype).alias("doc_id"),
+            F.lit(None).cast(dtype).alias("cluster_id"),
+            "seq",
+        )
+        found = (
+            raw.join(F.broadcast(keys), "doc_id")
+            .select("doc_id", "cluster_id", "seq")
+            .unionByName(top)
+            .collect()
+        )
+        for d, c, s in sorted(found, key=lambda r: r[2] or 0):
+            if d is None:
+                seq = (s or 0) + 1
+            else:
+                cur[d] = c  # ascending seq: latest wins
+    new = _driver_components(
+        [(cur.get(u, u), cur.get(v, v)) for u, v in rows], max_iter
+    )
+    changed = {r: lab for r, lab in new.items() if lab != r}
+    # endpoints whose label changes; an endpoint in a changed stored
+    # cluster is written by the member probe below instead
+    out = [
+        (d, new[cur.get(d, d)], seq)
+        for d in ids
+        if cur.get(d) not in changed and cur.get(d) != new[cur.get(d, d)]
+    ]
+    delta = _label_frame(spark, out, schema("doc_id", "cluster_id", "seq"))
+    if raw is not None and changed:
+        # members of merged clusters, probed by label (sound for the
+        # reason given at _cluster_merge_delta); the eager checkpoint
+        # reads them before batch=<id> is overwritten
+        old = _label_frame(spark, list(changed.items()), schema("old_label", "new_label"))
+        members = raw.join(F.broadcast(old), raw.cluster_id == F.col("old_label")).select(
+            raw.doc_id, F.col("new_label").alias("cluster_id"), F.lit(seq).cast("long").alias("seq")
+        )
+        return delta.unionByName(members.localCheckpoint()).coalesce(1)
+    return delta if out else None
 
 
 def _cluster_merge_delta(pairs, raw, *, max_iter: int):

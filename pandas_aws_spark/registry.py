@@ -220,7 +220,14 @@ _REWRITTEN_THIS_ROUND: dict[str, int] = {
     # dump control: 0/240). The replay fix in index_batch_near_dup_pairs
     # runs inside the lifecycle entries, not in their returned plans —
     # those re-verify through _SUBSTRATE_OWNERSHIP (dedup.py changed).
+    # Also r17: connected_components labels graphs within its edge cap
+    # on the driver, so the two entries that return its labels now read
+    # a driver-built relation; the n-gram gram-set sizes aggregate only
+    # the small-block docs. tools/diff_plans.py base(aa693de)->HEAD:
+    # 3 rewritten (these), 237 unchanged (control: 0/240).
     "q_dedup_ngram_jaccard": 17,
+    "q_dedup_clusters": 17,
+    "q_dedup_cluster_best": 17,
 }
 
 # ---------------------------------------------------------------------------

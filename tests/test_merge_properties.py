@@ -180,6 +180,94 @@ def test_incremental_cluster_labels_match_union_find(spark, p0, p1, p2):
 
 
 # --------------------------------------------------------------------------
+# Cluster labelling runs on the driver for small pair graphs and as
+# distributed label propagation above an edge cap: for ANY graph the two
+# paths give identical labels, identical stored label rows, and raise on
+# the same inputs (a component deeper than max_iter), for
+# connected_components and for init + two merges alike.
+# --------------------------------------------------------------------------
+_chain = st.integers(min_value=0, max_value=5)
+
+
+def _on_both_paths(fn):
+    """``fn()`` on the driver path and with the cap forced to 0 (the
+    distributed path): each result, or "raised" for non-convergence."""
+    from unittest import mock
+
+    from pandas_aws_spark.operators import dedup
+
+    out = []
+    for cap in (dedup._DRIVER_CC_MAX_EDGES, 0):
+        with mock.patch.object(dedup, "_DRIVER_CC_MAX_EDGES", cap):
+            try:
+                out.append(fn())
+            except RuntimeError as e:
+                assert "did not converge" in str(e)
+                out.append("raised")
+    return out
+
+
+def _with_chain(pairs, n):
+    # a path of n edges: depth n from its min node
+    return list(pairs) + [(100 + i, 101 + i) for i in range(n)]
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(pairs=_cpairs, chain=_chain, max_iter=st.integers(min_value=2, max_value=4))
+def test_connected_components_driver_matches_distributed(spark, pairs, chain, max_iter):
+    from pandas_aws_spark.operators.dedup import connected_components
+
+    ps = _with_chain(pairs, chain)
+    frame = spark.createDataFrame(ps or [(99, 98)], "id_a long, id_b long")
+    frame = frame if ps else frame.filter("id_a < 90")
+
+    def run():
+        cc = connected_components(frame, max_iter=max_iter)
+        return cc.dtypes, sorted(tuple(r) for r in cc.collect())
+
+    driver, distributed = _on_both_paths(run)
+    assert driver == distributed
+    if chain >= max_iter:
+        assert driver == "raised"
+    if driver != "raised":
+        assert driver[1] == _union_find_labels(ps)
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(p0=_cpairs, p1=_cpairs, p2=_cpairs, chain=_chain)
+def test_cluster_merges_driver_matches_distributed(spark, p0, p1, p2, chain):
+    import shutil
+    import tempfile
+
+    from pandas_aws_spark.operators.dedup import (
+        _read_raw_cluster_labels,
+        init_cluster_labels,
+        merge_cluster_labels,
+    )
+
+    def frame(ps):
+        d = spark.createDataFrame(ps or [(99, 98)], "id_a long, id_b long")
+        return d.filter("id_a < 90") if not ps else d
+
+    # the chain lands in the SECOND merge, where it may exceed max_iter
+    batches = [frame(p0), frame(p1), frame(_with_chain(p2, chain))]
+
+    def run():
+        path = tempfile.mkdtemp(prefix="cc_paths_")
+        try:
+            init_cluster_labels(batches[0], path, max_iter=4)
+            merge_cluster_labels(batches[1], path, batch_id="b1", max_iter=4)
+            merge_cluster_labels(batches[2], path, batch_id="b2", max_iter=4)
+            raw = _read_raw_cluster_labels(spark, path)
+            return sorted(tuple(r) for r in raw.select("doc_id", "cluster_id", "seq").collect())
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+
+    driver, distributed = _on_both_paths(run)
+    assert driver == distributed
+
+
+# --------------------------------------------------------------------------
 # Token-budget mixture selection (r12): for ANY doc/token sets, the
 # selection equals the greedy per-source prefix in hash-priority order
 # computed INDEPENDENTLY in Python (its own md5 arithmetic), with the

@@ -16,6 +16,12 @@ retry overwrites would hide listing overhead).
 Usage: python tools/measure_cluster_merge.py
 Env: SCALE_SMALL (default /root/testdata/sf0.01),
      SCALE_BIG (default /root/testdata/sf0.1), BATCH_DOCS (default 512).
+
+``PATHOLOGICAL=<groups>,<population>``: one hub merge bridging many
+clusters (below). ``CROSSOVER=<pairs>[,<pairs>...]``: wall of
+``connected_components`` on the driver path vs the distributed path
+for synthetic dedup-shaped graphs (chains of 4 docs) of that many
+pairs — the measurement behind ``dedup._DRIVER_CC_MAX_EDGES``.
 """
 
 from __future__ import annotations
@@ -148,7 +154,44 @@ def measure_pathological(spark, n_groups: int, group_size: int, population: int)
     }
 
 
+def measure_crossover(spark, n_pairs: int) -> dict:
+    """Driver vs distributed ``connected_components`` over ``n_pairs``
+    pinned pairs (clusters of 4 docs chained a-b-c-d, 3 pairs each, so
+    every path runs the same shallow rounds); each wall is the min of
+    2 runs, output consumed by a noop write."""
+    from pandas_aws_spark.operators import dedup
+
+    pairs = (
+        spark.range(n_pairs)
+        .selectExpr("(id DIV 3) * 4 + id % 3 AS id_a", "(id DIV 3) * 4 + id % 3 + 1 AS id_b")
+        .localCheckpoint()
+    )
+    walls = {}
+    for name, cap in (("driver", max(n_pairs * 2, dedup._DRIVER_CC_MAX_EDGES)), ("distributed", 0)):
+        saved, dedup._DRIVER_CC_MAX_EDGES = dedup._DRIVER_CC_MAX_EDGES, cap
+        try:
+            runs = []
+            for _ in range(2):
+                t0 = time.perf_counter()
+                connected_components(pairs).write.format("noop").mode("overwrite").save()
+                runs.append(time.perf_counter() - t0)
+            walls[name] = round(min(runs), 2)
+        finally:
+            dedup._DRIVER_CC_MAX_EDGES = saved
+    return {"pairs": n_pairs, **walls}
+
+
 def main() -> int:
+    if os.environ.get("CROSSOVER"):
+        spark = get_spark(app_name="measure-cc-crossover")
+        spark.range(10).count()  # warm-up
+        for n in (int(x) for x in os.environ["CROSSOVER"].split(",")):
+            r = measure_crossover(spark, n)
+            print(
+                f"pairs={r['pairs']:8d} driver={r['driver']:7.2f}s "
+                f"distributed={r['distributed']:7.2f}s"
+            )
+        return 0
     if os.environ.get("PATHOLOGICAL"):
         # one config per PROCESS: the bootstrap CC's localCheckpoint
         # blocks from a previous config otherwise linger in executor
